@@ -177,19 +177,23 @@ object Multimodal {
     * fall back to [[FakeCodec]] so mixed-modality batches never throw. */
   object ImageIoCodec extends Codec {
     private def read(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] = {
-      // ImageIO's default useCache=true backs EVERY ImageInputStream with
-      // a fresh temp FILE on disk — including calls where no reader
+      // ImageIO.read(InputStream) wraps its input in a stream chosen by
+      // the JVM-global useCache flag, whose default backs EVERY stream
+      // with a fresh temp FILE on disk — including calls where no reader
       // recognizes the bytes (two per row here: decodeDims + embed). For
       // in-memory byte arrays that is pure per-row disk I/O whose cost
       // tracks the temp filesystem's state, not the query (r19/r20: the
       // dims gate drifted 0.46 → 1.8 s across rounds with zero code
-      // change). Memory-cached streams are the documented choice for
-      // byte-array inputs; decode output is identical. JVM-global and
-      // idempotent, so setting it per read() call is safe.
-      javax.imageio.ImageIO.setUseCache(false)
-      try Option(javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes)))
+      // change). A memory-cached stream built here is the documented
+      // choice for byte-array inputs and leaves the global flag alone;
+      // decode output is identical.
+      val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try Option(javax.imageio.ImageIO.read(in))
       catch { case _: Exception => None }
+      // ImageIO.read closes the stream itself once a reader claimed it,
+      // and a second close throws; this close is for the no-reader case
+      finally try in.close() catch { case _: java.io.IOException => }
     }
 
     def decodeDims(bytes: Array[Byte]): (Int, Int) =

@@ -21,13 +21,8 @@ import org.apache.spark.sql.DataFrame
   * unpersisted plan lazily recomputes, so eviction is never a correctness
   * event.
   *
-  * Bench cold-sample contract: [[clear]] unpersists every registered frame.
-  * Bench.scala calls it before EVERY timed sample, so a timed sample can
-  * never read an InMemoryRelation built by the untimed warmup (or by a
-  * previous sample) of one of these frames — the r19 verdict's "warmup
-  * computes, timed samples read cache" hazard. Frames still serve their
-  * real purpose inside the sample: the several consumers of one action
-  * share one computation, and that build cost is INSIDE the timed window.
+  * [[clear]] unpersists every registered frame; specs call it to start
+  * each test from an empty registry.
   */
 object OpCaches {
 
@@ -94,9 +89,8 @@ object OpCaches {
   }
 
   /** Unpersist and forget EVERY registered frame. Blocking, so the freed
-    * blocks are gone before the caller's next timed region starts — this
-    * is the Bench per-sample cold hook (see the class doc); it is also
-    * safe to call any time (frames lazily recompute). */
+    * blocks are gone when it returns — specs isolate with it (see the
+    * class doc); safe to call any time (frames lazily recompute). */
   def clear(): Unit = frames.synchronized {
     val it = frames.entrySet().iterator()
     while (it.hasNext) {

@@ -160,8 +160,8 @@ object Positional {
     // aggregate, main window pass) — persist the input once per call, via
     // the bounded OpCaches registry (r20: a bare persist had no unpersist
     // path; the registry LRU-bounds the lifetime).
-    // Persist re-measured COLD in r20 (per-sample OpCaches.clear in the
-    // bench): still a win — q_spearman 3.08 vs 4.26 s, q_prefix_sum 1.56
+    // Persist re-measured COLD in r20 (registry cleared before every timed
+    // sample): still a win — q_spearman 3.08 vs 4.26 s, q_prefix_sum 1.56
     // vs 1.87 s without it — so the 3-consumer reuse beats the columnar
     // cache build even when every sample pays the build.
     val df = OpCaches.cached(df0)

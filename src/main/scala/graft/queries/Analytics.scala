@@ -26,6 +26,34 @@ object Analytics {
   private def isum(c: Column): Column =
     sum(c.cast(DecimalType(38, 0))).cast("double")
 
+  private def dec(c: Column): Column = c.cast(DecimalType(38, 0))
+
+  /** Average ranks (doubled → exact integers) from grouped value counts:
+    * r2 = 2·|smaller| + ties + 1, via the distributed prefix sum — no
+    * per-group full-table window anywhere. */
+  private def ranksOf(counted: DataFrame, v: String, r: String): DataFrame =
+    Positional.groupedPrefixSum(counted, Seq("l_returnflag"),
+        Seq(col(v)), col("c"), "cum")
+      .withColumn(r, lit(2L) * (col("cum") - col("c")) + col("c") + lit(1L))
+
+  /** q_spearman's six power sums per flag (n, sx, sy, sxx, syy, sxy) from
+    * the per-(l_returnflag, yi) value-count table `g`: `c` rows carry the
+    * value yi, and their xi ranks sum to `srx` (Σrx) and `srxx` (Σrx²).
+    * The rank factors are cast to DECIMAL(38,0) BEFORE they multiply: a
+    * partial such as c·ry² grows as c·(2N)², so in BIGINT it would abort
+    * under ANSI once c·(2N)² ≥ 2⁶³ — with a large enough tie group, far
+    * below the ~3·10⁹ rows per group a single rank product allows. */
+  private[graft] def spearmanSums(g: DataFrame): DataFrame = {
+    val ry = dec(col("ry"))
+    ranksOf(g, "yi", "ry")
+      .groupBy(col("l_returnflag"))
+      .agg(sum(col("c")).cast("double").as("n"),
+        isum(col("srx")).as("sx"), isum(dec(col("c")) * ry).as("sy"),
+        isum(col("srxx")).as("sxx"),
+        isum(dec(col("c")) * ry * ry).as("syy"),
+        isum(dec(col("srx")) * ry).as("sxy"))
+  }
+
   val defs: Map[String, Q] = Map(
     // Per-column corpus profile (deequ/describe shape): row count, nulls,
     // exact distinct, min/max — one parquet-pruned aggregate per column
@@ -88,8 +116,9 @@ object Analytics {
     // grouped value counts + the distributed prefix sum — NO per-group
     // full-table window anywhere — then Pearson on the integer ranks via
     // the q_corr decimal machinery. rho is scale-invariant, so the rank
-    // doubling cancels. (Rank products stay < 2⁶³ up to ~3·10⁹ rows per
-    // group; past that, cast ranks to DECIMAL before squaring.)
+    // doubling cancels. (Ranks are BIGINT; every rank product and power
+    // sum is DECIMAL(38,0), exact while 4·N³ < 10³⁸, i.e. up to ~2.9·10¹²
+    // rows per group.)
     "q_spearman" -> Q(
       (s, dir) => {
         // Plan shape (r20, guide §2.3/§2.4 — aggregate before you
@@ -113,14 +142,6 @@ object Analytics {
         val d = tbl(s, dir, "lineitem").select(col("l_returnflag"),
           round(col("l_quantity") * 100).cast("long").as("xi"),
           round(col("l_extendedprice") * 100).cast("long").as("yi"))
-        // average ranks (doubled → exact integers) from grouped value
-        // counts: r2 = 2·|smaller| + ties + 1, via the distributed prefix
-        // sum — no per-group full-table window anywhere.
-        def ranksOf(counted: DataFrame, v: String, r: String): DataFrame =
-          Positional.groupedPrefixSum(counted, Seq("l_returnflag"),
-              Seq(col(v)), col("c"), "cum")
-            .withColumn(r,
-              lit(2L) * (col("cum") - col("c")) + col("c") + lit(1L))
         // ~50 distinct quantity-cents values per flag — broadcast-safe at
         // any scale (guide §3.1: the r18 plan auto-broadcast the full
         // fact projection instead; pin the genuinely tiny side).
@@ -128,21 +149,14 @@ object Analytics {
           d.groupBy(col("l_returnflag"), col("xi"))
             .agg(count(lit(1)).as("c")), "xi", "rx")
           .select(col("l_returnflag"), col("xi"), col("rx"))
-        // Value-count table over yi, carrying the xi-rank partials. Long
-        // partials inherit the existing rank-product bound (comment
-        // above: exact up to ~3·10⁹ rows per group; past that cast to
-        // DECIMAL before multiplying).
+        // Value-count table over yi, carrying the xi-rank partials,
+        // summed in DECIMAL(38,0) like the products of spearmanSums (Σrx²
+        // over a tie group of c rows grows as c·(2N)²).
         val g = d.join(broadcast(rx), Seq("l_returnflag", "xi"))
           .groupBy(col("l_returnflag"), col("yi"))
-          .agg(count(lit(1)).as("c"), sum(col("rx")).as("srx"),
-            sum(col("rx") * col("rx")).as("srxx"))
-        ranksOf(g, "yi", "ry")
-          .groupBy(col("l_returnflag"))
-          .agg(sum(col("c")).cast("double").as("n"),
-            isum(col("srx")).as("sx"), isum(col("c") * col("ry")).as("sy"),
-            isum(col("srxx")).as("sxx"),
-            isum(col("c") * col("ry") * col("ry")).as("syy"),
-            isum(col("srx") * col("ry")).as("sxy"))
+          .agg(count(lit(1)).as("c"), sum(dec(col("rx"))).as("srx"),
+            sum(dec(col("rx")) * dec(col("rx"))).as("srxx"))
+        spearmanSums(g)
           .select(col("l_returnflag"),
             ((col("sxy") - col("sx") * col("sy") / col("n")) /
               (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *

@@ -534,11 +534,6 @@ object Similarity {
     * query (16% vs 9% of that corpus). Recall-per-byte favors 16k
     * everywhere it has any effect. */
   private[graft] val MatPrefixDim = 40
-  /** The pre-r18 prefix width, kept ONLY so MatPrefixProbe's sweep always
-    * carries the below-the-knee baseline arm alongside the shipped point
-    * (same rule as [[MatShortlistMinPrior]]): a retune must not leave the
-    * probe unable to reproduce the committed decision artifact. */
-  private[graft] val MatPrefixDimPrior = 32
   private[graft] val MatShortlistMin = 16 * K
   /** The pre-r17 floor (8·K), kept ONLY so the sf1 probe's old-vs-new
     * floor sweep derives both arms from named constants instead of
@@ -631,14 +626,14 @@ object Similarity {
 
   /** Recall@k of each ANN configuration against the exact brute-force
     * baseline on the same corpus, over the 40-query [[RecallPanel]]: mean
-    * over query ids of |ANN top-k ∩ brute top-k| / |brute top-k|. The bench
-    * emits this per round (`queries_recall`): wall/cpu/gc/peak-mem catch
-    * time and memory regressions, recall@k catches the failure mode those
-    * hide — an ANN change that silently stops finding the true neighbors at
-    * unchanged speed. Driver-side cost is per-ANN ≤ |panel|·K row collects.
-    * All inputs are deterministic (hash planes, seed/k-means centroids,
-    * fixed panel), so the values are exact per-dataset constants, not
-    * run-to-run statistics. */
+    * over query ids of |ANN top-k ∩ brute top-k| / |brute top-k|. The
+    * traced benchmark reports it (`operators.recall.<gate>`): timing and
+    * heap metrics catch time and memory regressions, recall@k catches the
+    * failure mode those hide — an ANN change that silently stops finding
+    * the true neighbors at unchanged speed. Driver-side cost is per-ANN
+    * ≤ |panel|·K row collects. All inputs are deterministic (hash planes,
+    * seed/k-means centroids, fixed panel), so the values are exact
+    * per-dataset constants, not run-to-run statistics. */
   def recallVsBrute(s: org.apache.spark.sql.SparkSession, dir: String,
       annNames: Seq[String] = Seq("q_sim_knn_lsh", "q_sim_knn_lsh_mp",
         "q_sim_knn_ivf", "q_sim_knn_ivf_learned",

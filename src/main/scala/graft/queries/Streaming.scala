@@ -174,6 +174,15 @@ object Streaming {
   private val SplitRuleVersion = 3
   private val TwoHoursNs = 7200000000000L
 
+  /** Where [[stageEventsMulti]] cuts the events' time span into its
+    * batches, as (numerator, denominator) of max(ts) − min(ts): batch 1
+    * ends at cut1, batch 2 at cut2. The gates and oracles that recompute a
+    * cut from the same min/max use these too. */
+  private val Cut1Frac = (6L, 10L)
+  private val Cut2Frac = (85L, 100L)
+  private def cutAt(t0: Long, span: Long, frac: (Long, Long)): Long =
+    t0 + span * frac._1 / frac._2
+
   /** user_id carried by the session gate's watermark-sentinel rows.
     * Staging fails fast if the real data ever contains this key (see
     * the guard in [[stageEventsMulti]]); the gate's post-drain filter
@@ -421,8 +430,8 @@ object Streaming {
       val t0 = mm.getLong(0)
       val maxTs = mm.getLong(1)
       val span = maxTs - t0
-      val cut1 = t0 + span * 6L / 10L
-      val cut2 = t0 + span * 85L / 100L
+      val cut1 = cutAt(t0, span, Cut1Frac)
+      val cut2 = cutAt(t0, span, Cut2Frac)
       // ordered variant: pure time ranges — no straggler rerouting
       val straggler = if (ordered) lit(false)
         else col("event_id") % 50 === 0 && col("ts") <= cut1 - TwoHoursNs
@@ -644,7 +653,8 @@ object Streaming {
       Some(s"""WITH b AS (
               |  SELECT min(epoch_ns(ts)) AS t0, max(epoch_ns(ts)) AS t1
               |  FROM events),
-              |c AS (SELECT t0 + (t1 - t0) * 6 // 10 AS cut1 FROM b),
+              |c AS (SELECT t0 + (t1 - t0) * ${Cut1Frac._1} // ${Cut1Frac._2}
+              |        AS cut1 FROM b),
               |lab AS (
               |  SELECT event_id, epoch_ns(ts) AS tn,
               |         (event_id % 50 = 0 AND
@@ -769,7 +779,15 @@ object Streaming {
         val mm = canonicalizeTime(s.read.parquet(s"$dir/events.parquet"))
           .agg(min(col("ts")), max(col("ts"))).head()
         val t0 = mm.getLong(0)
-        val cut1 = t0 + (mm.getLong(1) - t0) * 6L / 10L
+        val span = mm.getLong(1) - t0
+        val cut1 = cutAt(t0, span, Cut1Frac)
+        // the no-data-batch skip below needs every click window (end ≤
+        // cut1 + 30 min) evicted by the post-batch-2 watermark (cut2 − 1h)
+        val marginNs = (60L + 30L) * 60L * 1000000000L
+        require(cutAt(t0, span, Cut2Frac) - cut1 > marginNs,
+          "staged cut2 − cut1 must exceed the 1 h watermark delay plus " +
+            "the 30 min match window, or unmatched clicks lose their " +
+            "null rows with the skipped no-data batch")
         val cut1Us = cut1 / 1000L
         val stragUs = (cut1 - TwoHoursNs) / 1000L
         def side(prefix: String, extra: Seq[org.apache.spark.sql.Column]) =
@@ -796,8 +814,9 @@ object Streaming {
         // a click at or below cut1 (window end ≤ cut1 + 30 min), and the
         // eviction watermark operative in the LAST DATA batch is the
         // post-batch-2 one, ≈ cut2 − 1h — cut2 − cut1 is a quarter of the
-        // replay's multi-day span, so every unmatched click's null row
-        // has provably emitted by the end of batch 3's data processing.
+        // replay's multi-day span (the require above), so every unmatched
+        // click's null row has provably emitted by the end of batch 3's
+        // data processing.
         // The trailing no-data batch could only evict leftover RIGHT-side
         // rows, which never emit. (The r20 phase probe confirms: left
         // state is empty after the data batches; the no-data batch's
@@ -810,7 +829,8 @@ object Streaming {
       Some(s"""WITH b AS (
               |  SELECT min(epoch_ns(ts)) AS t0, max(epoch_ns(ts)) AS t1
               |  FROM events),
-              |c AS (SELECT t0 + (t1 - t0) * 6 // 10 AS cut1 FROM b),
+              |c AS (SELECT t0 + (t1 - t0) * ${Cut1Frac._1} // ${Cut1Frac._2}
+              |        AS cut1 FROM b),
               |lab AS (
               |  SELECT event_id, user_id, event_type,
               |         epoch_ns(ts) // 1000 AS tu,

@@ -68,8 +68,11 @@ object Streams {
     * fingerprint is pure file METADATA (name/size/mtime — zero data I/O,
     * same contract as the staging markers), so a regenerated directory
     * re-probes while an unchanged one reuses its schema; this caches no
-    * query data, only the footer's type signature. Bounded: cleared when
-    * it outgrows a small cap (staged dirs are few and stable). */
+    * query data, only the footer's type signature. A path whose files
+    * cannot be listed (a single file, an unreadable or non-local dir) has
+    * no fingerprint and is probed fresh on every call, never memoized.
+    * Bounded: cleared when it outgrows a small cap (staged dirs are few
+    * and stable). */
   private val probedSchemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
@@ -79,23 +82,27 @@ object Streams {
       val p = java.nio.file.Paths.get(dir)
       val st = java.nio.file.Files.list(p)
       try { import scala.jdk.CollectionConverters._
-        st.iterator().asScala.toSeq
+        Some(st.iterator().asScala.toSeq
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .sortBy(_.getFileName.toString)
           .map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
             s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")
-          .mkString(",")
+          .mkString(","))
       } finally st.close()
-    } catch { case scala.util.control.NonFatal(_) => "unlistable" }
-    val key = s"$dir|$fp"
-    if (probedSchemas.size > 64) probedSchemas.clear()
-    probedSchemas.computeIfAbsent(key, _ =>
+    } catch { case scala.util.control.NonFatal(_) => None }
+    def probe() =
       try spark.read.parquet(dir).schema
       catch { case _: org.apache.spark.sql.AnalysisException =>
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_id BIGINT, ts BIGINT, user_id BIGINT, " +
             "event_type STRING, value DOUBLE, props STRING")
-      })
+      }
+    fp match {
+      case None => probe()
+      case Some(f) =>
+        if (probedSchemas.size > 64) probedSchemas.clear()
+        probedSchemas.computeIfAbsent(s"$dir|$f", _ => probe())
+    }
   }
 
   /** File-source ingest of a documents directory as an unbounded stream —

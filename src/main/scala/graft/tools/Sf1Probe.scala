@@ -1,7 +1,7 @@
 // Run with: sbt "runMain graft.tools.Sf1Probe [gate ...]"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Super-linear-tail probe: run the slow-tail gates ONCE at the scaled-up
@@ -16,6 +16,20 @@ import org.apache.spark.sql.functions._
   * cross-check (wall time on a busy sandbox is not).
   */
 object Sf1Probe {
+  /** (query_id → neighbor-id set) of a collected k-NN result frame. */
+  private def topSets(df: DataFrame): Map[Long, Set[Long]] =
+    df.select("query_id", "neighbor_id").collect()
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+
+  /** Mean recall@k of `ann` against the exact `brute` top-k sets — the
+    * same definition as queries.Similarity.recallVsBrute's panel. */
+  private def recallOf(brute: Map[Long, Set[Long]],
+      ann: Map[Long, Set[Long]]): Double =
+    brute.toSeq.map { case (q, b) =>
+      ann.getOrElse(q, Set.empty).intersect(b).size.toDouble / b.size
+    }.sum / brute.size
+
   def main(args: Array[String]): Unit = {
     val sf1 = "/root/repo/target/sf1"
     val sf01 = "/root/testdata/sf0.1"
@@ -66,7 +80,16 @@ object Sf1Probe {
       // re-rank breadth is max(8k, ⌈√n⌉), sublinear by construction
       "q_sim_knn_ivf_learned_k64", "q_sim_knn_pq_prod")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = ProbeUtil.session()
+    // local[SPARK_GRAFT_CPUS] with the confs every graft session uses
+    // (nanos timestamps, UTC, UI off, shuffle partitions = cpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
 
     // The timer wraps the WHOLE gate fn, not just the final collect:
     // streaming gates replay their micro-batch stream and ANN gates run
@@ -278,8 +301,6 @@ object Sf1Probe {
     // 0.20->0.12 across 10x) while the production codebook HOLDS recall
     // flat across the same growth — the precondition now documented on
     // rerankBreadthSublinear itself.
-    def topSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      ProbeUtil.topSets(df)
     def pqSublinear(dir: String, m: Int, cents: Int)
         : (Double, Int, Double) = {
       val emb = graft.queries.tbl(spark, dir, "embeddings")
@@ -299,7 +320,7 @@ object Sf1Probe {
         val sec = (System.nanoTime() - t0) / 1e9
         val brute = topSets(graft.operators.Similarity.knnBrute(
           emb, "embedding", "vec_id", panel, k))
-        val recall = ProbeUtil.recallOf(brute, ann)
+        val recall = recallOf(brute, ann)
         (sec, breadth, recall)
       } finally corpus.unpersist()
     }
@@ -344,7 +365,7 @@ object Sf1Probe {
           val ann = topSets(graft.operators.Similarity.knnTruncated(
             emb, "embedding", "vec_id", panel, k,
             graft.queries.Similarity.MatPrefixDim, shortlist))
-          ProbeUtil.recallOf(brute, ann)
+          recallOf(brute, ann)
         })
         (floor, shortlist, recall)
       }

@@ -176,6 +176,33 @@ class AnalyticsSpec extends SparkTestBase {
     }
   }
 
+  test("spearmanSums: rank partials stay exact past 2^63 (a tie group of " +
+      "c ≈ 2^31 rows)") {
+    // One flag, one price value shared by c = 2³¹ rows, tied in quantity
+    // too: rx = ry = c + 1, so c·ry² and srx·ry are ≈ 2⁹³ — a BIGINT
+    // product aborts under ANSI overflow checking.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val c = 1L << 31
+    val r = c + 1
+    val schema = StructType(Seq(StructField("l_returnflag", StringType),
+      StructField("yi", LongType), StructField("c", LongType),
+      StructField("srx", LongType), StructField("srxx", DecimalType(38, 0))))
+    val g = spark.createDataFrame(java.util.List.of(Row("A", 100L, c, c * r,
+      new java.math.BigDecimal((BigInt(c) * r * r).bigInteger))), schema)
+    val got = graft.queries.Analytics.spearmanSums(g).collect()
+    assert(got.length === 1)
+    val row = got.head
+    val cr = BigInt(c) * r
+    val crr = cr * r
+    assert(row.getAs[Double]("n") === c.toDouble)
+    assert(row.getAs[Double]("sx") === cr.toDouble)
+    assert(row.getAs[Double]("sy") === cr.toDouble)
+    assert(row.getAs[Double]("sxx") === crr.toDouble)
+    assert(row.getAs[Double]("syy") === crr.toDouble)
+    assert(row.getAs[Double]("sxy") === crr.toDouble)
+  }
+
   test("q_grouped_ols matches a driver-side least-squares fit") {
     val got = SparkEntry.queries("q_grouped_ols")(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1)) ->

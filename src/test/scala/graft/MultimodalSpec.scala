@@ -158,6 +158,18 @@ class MultimodalSpec extends SparkTestBase {
       Multimodal.FakeCodec.decodeDims(junk))
   }
 
+  test("ImageIoCodec leaves the JVM-global ImageIO cache flag alone") {
+    val before = javax.imageio.ImageIO.getUseCache
+    javax.imageio.ImageIO.setUseCache(true)
+    try {
+      val ds = Seq(MediaRow(1L, "image", realPng, 0, 0, 0)).toDS()
+      val got = Multimodal.decodeAndEmbed(ds, dim = 4).collect()
+      assert(got.map(f => (f.out_width, f.out_height)).toSeq === Seq((8, 6)))
+      assert(javax.imageio.ImageIO.getUseCache,
+        "decoding a row switched ImageIO's stream cache off for the JVM")
+    } finally javax.imageio.ImageIO.setUseCache(before)
+  }
+
   test("decodeAndEmbed is codec-pluggable and runs both codecs distributed") {
     val ds = Seq(MediaRow(1L, "image", realPng, 0, 0, 0),
         MediaRow(2L, "audio", blob(300, 5), 0, 0, 0))

@@ -177,6 +177,32 @@ class StreamsSpec extends SparkTestBase {
     assert(years.head.getInt(0) === 2024)
   }
 
+  test("eventStream re-probes a path it cannot fingerprint (a single " +
+      "parquet file rewritten with another schema)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-file")
+    val file = dir.resolve("events.parquet")
+    def writeAs(cols: String*): Unit = {
+      val tmp = dir.resolve("out.tmpdir")
+      cols.foldLeft(Seq((1L, 1700000000000000000L)).toDF("event_id", "ts")) {
+          (df, c) => df.withColumn(c, lit(1)) }
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      import scala.jdk.CollectionConverters._
+      val part = java.nio.file.Files.list(tmp).iterator().asScala
+        .find(_.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(part, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+    writeAs("a")
+    assert(Streams.eventStream(spark, file.toString).columns.toSeq ===
+      Seq("event_id", "ts", "a"))
+    writeAs("b", "c")
+    assert(Streams.eventStream(spark, file.toString).columns.toSeq ===
+      Seq("event_id", "ts", "b", "c"),
+      "the second probe served the first file's memoized schema")
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   // ---- multi-file replay semantics the multi-batch parity gates rely on --
 
   /** Write one events parquet file (nanos-long ts, the testdata layout)
